@@ -100,17 +100,15 @@ object Tables {
     * blanket.
     *
     * Scale-adaptive: the gate requires every leaf of the frame to be a
-    * file relation at most `spark.graft.scan.fanoutMaxBytes` (default
-    * 256 MB) on disk, so a production-sized input (100 TB arrives as
-    * thousands of row groups and parallelizes natively) passes through
-    * untouched — the exchange only exists where the bytes are small
+    * file relation at most 256 MB on disk, so a production-sized input
+    * (100 TB arrives as thousands of row groups and parallelizes
+    * natively) passes through untouched — the exchange only exists where the bytes are small
     * enough that moving them once is free relative to idling the
     * cluster. Round-robin keeps sizes even; its deterministic
     * sort-before-repartition (on by default, SPARK-23207) keeps row
     * placement replayable under task retry. Filters and column pruning
     * push through Repartition nodes, so PushedFilters/ReadSchema at the
-    * scan are unchanged. `spark.graft.scan.fanoutMaxBytes=0` disables
-    * every site at once. */
+    * scan are unchanged. */
   def fanout(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val n = spark.sparkContext.defaultParallelism
@@ -120,23 +118,17 @@ object Tables {
   /** Metadata-only smallness gate shared by [[fanout]] and
     * [[shareSmall]] (never plans or runs anything physical): every leaf
     * must be a file relation whose on-disk size is at most
-    * `spark.graft.scan.fanoutMaxBytes` (default 256 MB). In-memory
-    * frames (tests, fixtures) report MaxValue and fail the gate; so
-    * does any production-sized scan. `fanoutMaxBytes=0` disables every
-    * gated site at once. */
+    * [[SmallLeafBytes]]. In-memory frames (tests, fixtures) report
+    * MaxValue and fail the gate; so does any production-sized scan. */
   private def leavesSmall(df: DataFrame): Boolean = {
-    val maxB = df.sparkSession.conf.get("spark.graft.scan.fanoutMaxBytes",
-      "268435456").toLong
-    if (maxB <= 0) false
-    else {
-      val leafBytes = df.queryExecution.analyzed.collectLeaves().map {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          lr.relation.sizeInBytes
-        case _ => Long.MaxValue
-      }
-      leafBytes.nonEmpty && leafBytes.forall(_ <= maxB)
+    val leafBytes = df.queryExecution.analyzed.collectLeaves().map {
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        lr.relation.sizeInBytes
+      case _ => Long.MaxValue
     }
+    leafBytes.nonEmpty && leafBytes.forall(_ <= SmallLeafBytes)
   }
+  private val SmallLeafBytes = 256L * 1024 * 1024
 
   /** Size-gated LAZY share of a frame consumed by several branches or
     * sequential jobs of ONE query invocation (the `agg(scalar)` →

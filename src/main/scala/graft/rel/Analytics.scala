@@ -694,8 +694,9 @@ object Analytics {
     * Per-column sums over the identical day grouping are independent,
     * so each column of the combined frame is byte-identical to the
     * single-weight build. NOT materialized here: [[sweepIntervals]]
-    * checkpoints eagerly (measured best for single-query use), the memo
-    * channel checkpoints via memoized(). */
+    * checkpoints eagerly (measured best for single-query use), and
+    * SparkEntry's memo builder checkpoints the shared build once per
+    * (session, dir, name) and fingerprint of the input files. */
   def sweepDeltas(intervals: DataFrame, startCol: String, endCol: String,
                   weightCols: Seq[String], points: DataFrame,
                   pointCol: String): DataFrame = {

@@ -1069,9 +1069,9 @@ object Similarity {
   /** The arrival fold as a shareable state (r20): q_ivf_incremental
     * (state rows) and q_ivf_incremental_topk (search through the folded
     * index) consume the SAME fold — an online index is maintained once
-    * and served from, so the engine folds once per (session, dir) and
-    * SparkEntry memoizes this handle with the build seconds reported in
-    * memo_sec like every shared frame. */
+    * and served from, so SparkEntry memoizes this handle like every
+    * shared frame: one fold per (session, dir, name) and fingerprint of
+    * the input files, build seconds reported in memo_sec. */
   def incrementalIvfFold(embeddings: DataFrame, nlist: Int, chunks: Int,
                          decayed: Boolean = false): IncrementalIvfState =
     foldIncremental(embeddings, nlist, chunks, decayed)

@@ -23,7 +23,8 @@ import graft.SparkSuite
   * Measured variants per drift magnitude: offline Lloyd (3 rounds over
   * the full corpus), the plain cumulative online fold, and the decayed
   * fold ([[Similarity.IncrementalIvfState!.decay]] between epochs — the
-  * mitigation). Curve ships as ANN_DRIFT_CURVE.json.
+  * mitigation). Curve is written to target/ANN_DRIFT_CURVE.json; the
+  * committed root copy ships it.
   */
 class DriftIvfSpec extends SparkSuite {
 
@@ -69,7 +70,8 @@ class DriftIvfSpec extends SparkSuite {
           f""""delta_online":${off - on}%.4f,"delta_decayed":${off - dec}%.4f}"""
       }
     }
-    Files.writeString(Paths.get("ANN_DRIFT_CURVE.json"),
+    val out = Files.createDirectories(Paths.get("target")).resolve("ANN_DRIFT_CURVE.json")
+    Files.writeString(out,
       s"""{"corpus_n":$n,"dim":$dim,"n_clusters":$nClusters,""" +
         s""""nlist":$nlist,"n_queries":$nQ,"k":$k,"epochs":$epochs,""" +
         s""""noise":$noise,"queries":"final_epoch_distribution",""" +

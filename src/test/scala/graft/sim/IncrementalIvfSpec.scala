@@ -295,8 +295,8 @@ class IncrementalIvfSpec extends SparkSuite {
     * synthetic regime as IvfCurveSpec (noise 0.9: true neighbors leak
     * across list boundaries, so centroid quality actually moves
     * recall); recall is against brute-force ground truth via the one
-    * shared annRecall definition. Curve ships as
-    * ANN_ONLINE_CURVE.json. */
+    * shared annRecall definition. Curve is written to
+    * target/ANN_ONLINE_CURVE.json; the committed root copy ships it. */
   test("incremental centroids search within a band of offline Lloyd (curve recorded)") {
     val nlist = 64
     val nQ = 20
@@ -323,7 +323,8 @@ class IncrementalIvfSpec extends SparkSuite {
       f"""{"variant":"offline_lloyd3","nprobe":$np,"mean_recall":${trainedRec(np)}%.4f}""") ++
       online.map { case (c, np, r) =>
         f"""{"variant":"online_fold","chunks":$c,"nprobe":$np,"mean_recall":$r%.4f}""" }
-    Files.writeString(Paths.get("ANN_ONLINE_CURVE.json"),
+    val out = Files.createDirectories(Paths.get("target")).resolve("ANN_ONLINE_CURVE.json")
+    Files.writeString(out,
       s"""{"corpus_n":20000,"dim":32,"n_queries":$nQ,"k":$k,"nlist":$nlist,""" +
         s""""points":${pts.mkString("[\n  ", ",\n  ", "\n]")}}""" + "\n")
 

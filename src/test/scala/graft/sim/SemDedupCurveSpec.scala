@@ -10,7 +10,7 @@ import graft.SparkSuite
   * (higher threshold → subset of drops → monotone non-increasing
   * drop_rate at fixed nlist) and that the sweep actually exercises the
   * knee (rates neither all-zero nor all-one), then records the grid to
-  * SEMDEDUP_CURVE.json at the repo root. */
+  * target/SEMDEDUP_CURVE.json (the committed root copy ships it). */
 class SemDedupCurveSpec extends SparkSuite {
 
   private val N = 20000L
@@ -57,7 +57,8 @@ class SemDedupCurveSpec extends SparkSuite {
       f"""{"nlist":$nl,"threshold":$t%.2f,"n_total":$total,""" +
         f""""n_dropped":$dropped,"drop_rate":$rate%.4f}"""
     }.mkString("[\n", ",\n", "\n]\n")
-    Files.writeString(Paths.get("SEMDEDUP_CURVE.json"), json)
-    assert(Files.exists(Paths.get("SEMDEDUP_CURVE.json")))
+    val out = Files.createDirectories(Paths.get("target")).resolve("SEMDEDUP_CURVE.json")
+    Files.writeString(out, json)
+    assert(Files.exists(out))
   }
 }
